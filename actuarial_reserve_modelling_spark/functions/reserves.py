@@ -15,9 +15,17 @@ Spark-first differences (deliberate, SURVEY §4.3-1):
   per *row* as ``sha256(seed, policy_id)`` so results are identical under
   any partitioning or task retry — never ``seed(partition_id)``.
 * **Arrow-vectorized kernel.** ``mapInPandas`` over columnar batches
-  instead of a per-row struct loop; numpy draws all trials of one policy
-  at once. Column pruning to (id, term) happens before the kernel so the
-  scan reads 2 of 9 columns (the reference reads all 9, main.rs:51).
+  instead of a per-row struct loop. Column pruning to (id, term) happens
+  before the kernel so the scan reads 2 of 9 columns (the reference
+  reads all 9, main.rs:51).
+* **Two exact distributional identities replace the trial loop.**
+  ``floor(Exp(mean=β))`` is Geometric on {0,1,…} with success
+  probability ``p = 1 − e^{−1/β}``, so the claim count summed over all
+  trials is one ``NegativeBinomial(n_trials, p)`` draw; and a sum of
+  ``n`` i.i.d. ``Normal(μ,σ²)`` claims is one ``Normal(nμ, nσ²)`` draw.
+  By default each policy costs two RNG calls instead of the reference's
+  ~n_trials·(1 + E[n]) (E[n] = claims per trial), with an output
+  identical in distribution to main.rs:62-80.
 * **Partial+final aggregation is Spark's own.** The worker-mean /
   Lambda-sum split (SURVEY §2.5 A3) is exactly
   ``HashAggregate(partial) → Exchange → HashAggregate(final)``.
@@ -79,27 +87,40 @@ def simulate_reserves(
     (sum over policies is taken by the caller, so partial aggregation
     stays map-side).
 
-    By default the per-trial claim total is drawn via the exact
-    distributional identity  Σ_{j=1..n} N(μ,σ²) ≡ N(n·μ, n·σ²):
-    one Normal draw per policy replaces the ~E[n]·n_trials individual
-    claim draws (≈100× fewer RNG calls at the default parameters) with
-    an output that is *identical in distribution* to the reference's
-    claim-by-claim loop (main.rs:70-73). ``exact_claims=True`` keeps the
-    claim-by-claim draws for strict procedural parity.
+    Two exact distributional identities stand in for the reference's
+    loops, so the output is *identical in distribution* to main.rs:62-80:
+
+    * claim counts: ``floor(Exp(mean=β))`` with ``β = term/claim_interval``
+      is Geometric with ``p = 1 − e^{−1/β}``, and a sum of ``n_trials``
+      i.i.d. Geometrics is ``NegativeBinomial(n_trials, p)`` — one draw
+      replaces the n_trials exponentials (main.rs:67,70);
+    * claim amounts: ``Σ_{j=1..n} N(μ,σ²) ≡ N(n·μ, n·σ²)`` — one Normal
+      draw replaces the n individual claim draws (main.rs:71-73).
+
+    That is 2 RNG calls per policy instead of the reference's
+    ~n_trials·(1 + E[n]) (E[n] = claims per trial). ``exact_claims=True``
+    keeps the claim-by-claim Normal draws for procedural parity of the
+    amounts.
+
+    ``term = 0`` gives a zero reserve; a negative or null term raises.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["id"].astype(str).to_numpy()
             terms = pdf["term"].to_numpy(dtype="float64")
+            # floor(Exp(mean=term/interval)) (main.rs:67,70) is Geometric
+            # with success probability p = 1 - exp(-interval/term); term = 0
+            # gives p = 1 (no claims) without a divide warning, and a
+            # negative or null term gives an invalid p that numpy rejects
+            with np.errstate(divide="ignore"):
+                ps = -np.expm1(-claim_interval / terms)
             out = np.empty(len(ids), dtype="float64")
             for i in range(len(ids)):
                 rng = np.random.default_rng(row_seed(seed, ids[i]))
-                # x ~ Exp(mean=term/interval)  (main.rs:67)
-                x = rng.exponential(terms[i] / claim_interval, n_trials)
-                # n = floor(x) claims per trial (main.rs:70); total across
-                # trials — sum of per-trial sums == sum of all claims.
-                n_claims = int(np.floor(x).sum())
+                # total claims across all trials: a sum of n_trials
+                # Geometrics is NegativeBinomial(n_trials, p)
+                n_claims = int(rng.negative_binomial(n_trials, ps[i]))
                 if exact_claims:
                     total = rng.normal(mean_claim, std_claim, n_claims).sum()
                 else:

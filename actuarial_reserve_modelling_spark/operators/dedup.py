@@ -1376,15 +1376,6 @@ def add_to_dedup_index(
         )
 
         want = meta["bands"] * meta["rows_per_band"]
-        # params-hash first (driver-side, zero jobs): catches a frame
-        # with the SAME signature shape but a different seed, which the
-        # length probe below cannot see (r14 verdict hardening item)
-        check_presigned_params(
-            presigned,
-            "sig",
-            minhash_fingerprint(want, meta["seed"]),
-            "add_to_dedup_index",
-        )
         probe = presigned.select(F.size("sig").alias("_n")).limit(1).collect()
         if probe and int(probe[0]["_n"]) != want:
             raise ValueError(
@@ -1393,6 +1384,16 @@ def add_to_dedup_index(
                 "signed with different parameters than this tier; refusing "
                 "to append mismatched signatures"
             )
+        # params-hash after the shape probe (driver-side, zero jobs):
+        # catches a frame with the SAME signature shape but a different
+        # seed, which the length probe cannot see, while a wrong-shape
+        # frame keeps the probe's specific message
+        check_presigned_params(
+            presigned,
+            "sig",
+            minhash_fingerprint(want, meta["seed"]),
+            "add_to_dedup_index",
+        )
         signed = presigned.join(
             new_docs.select("doc_id"), "doc_id", "leftsemi"
         )
@@ -1842,14 +1843,6 @@ def minhash_dedup_against_index_persisted(
             minhash_fingerprint,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            minhash_fingerprint(
-                meta["bands"] * meta["rows_per_band"], meta["seed"]
-            ),
-            "minhash_dedup_against_index_persisted",
-        )
         probe = presigned.select(F.size("sig").alias("_n")).limit(1).collect()
         want = meta["bands"] * meta["rows_per_band"]
         if probe and int(probe[0]["_n"]) != want:
@@ -1859,6 +1852,12 @@ def minhash_dedup_against_index_persisted(
                 f"= {want} — the frame was signed with different parameters "
                 "than this tier; refusing to compare mismatched signatures"
             )
+        check_presigned_params(
+            presigned,
+            "sig",
+            minhash_fingerprint(want, meta["seed"]),
+            "minhash_dedup_against_index_persisted",
+        )
     if meta["k_band_parts"] is None:
         return minhash_dedup_against_index(
             new_docs,

@@ -4699,12 +4699,6 @@ def persist_vecsig_index(
             hyperplane_fingerprint,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            hyperplane_fingerprint(num_planes, num_tables, seed, dim),
-            "persist_vecsig_index",
-        )
         probe = presigned.agg(F.countDistinct("table").alias("_t")).collect()
         got_t = int(probe[0]["_t"] or 0) if probe else 0
         if got_t not in (0, num_tables):
@@ -4714,6 +4708,12 @@ def persist_vecsig_index(
                 "the frame was signed with different parameters; refusing "
                 "to persist mismatched signatures"
             )
+        check_presigned_params(
+            presigned,
+            "sig",
+            hyperplane_fingerprint(num_planes, num_tables, seed, dim),
+            "persist_vecsig_index",
+        )
         sigs = (
             presigned.select("vec_id", "table", "sig")
             .join(vecs.select("vec_id"), "vec_id", "leftsemi")
@@ -4792,14 +4792,6 @@ def add_to_vecsig_index(
             hyperplane_fingerprint,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            hyperplane_fingerprint(
-                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-            ),
-            "add_to_vecsig_index",
-        )
         if "spart" not in presigned.columns:
             raise ValueError(
                 "add_to_vecsig_index: presigned frame lacks the 'spart' "
@@ -4816,6 +4808,14 @@ def add_to_vecsig_index(
                 "different parameters than this tier; refusing to append "
                 "mismatched signatures"
             )
+        check_presigned_params(
+            presigned,
+            "sig",
+            hyperplane_fingerprint(
+                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
+            ),
+            "add_to_vecsig_index",
+        )
         sigs = presigned.select("vec_id", "table", "sig", "spart").join(
             batch.select("vec_id"), "vec_id", "leftsemi"
         )
@@ -5051,14 +5051,6 @@ def lsh_cosine_dedup_against_index_persisted(
             hyperplane_fingerprint,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            hyperplane_fingerprint(
-                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-            ),
-            "lsh_cosine_dedup_against_index_persisted",
-        )
         if "spart" not in presigned.columns:
             raise ValueError(
                 "lsh_cosine_dedup_against_index_persisted: presigned frame "
@@ -5075,6 +5067,14 @@ def lsh_cosine_dedup_against_index_persisted(
                 f"= {meta['num_tables']} — the frame was signed with "
                 "different parameters than this tier"
             )
+        check_presigned_params(
+            presigned,
+            "sig",
+            hyperplane_fingerprint(
+                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
+            ),
+            "lsh_cosine_dedup_against_index_persisted",
+        )
     batch = new_vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
     if route == "auto":
         # decide BEFORE signing: the decision needs only |batch| (a

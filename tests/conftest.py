@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import numpy as np
 import pytest
 
@@ -15,6 +17,33 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     spark = get_spark(app_name="arm-spark-tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture(scope="session")
+def registry_run(spark):
+    """Every registry query built and counted once at sf0.001, shared by
+    the tests that need the whole registry. Per query name:
+    ``schema`` and ``build_error`` from building the plan, then
+    ``count`` and ``count_error`` from running it (skipped when the
+    build failed)."""
+    from actuarial_reserve_modelling_spark.plans.registry import load_all
+
+    runs = {}
+    for name, q in load_all().items():
+        r = runs[name] = SimpleNamespace(
+            schema=None, build_error=None, count=None, count_error=None
+        )
+        try:
+            df = q.spark_fn(spark, SF_SMOKE)
+            r.schema = df.schema
+        except Exception as e:
+            r.build_error = repr(e)
+            continue
+        try:
+            r.count = df.count()
+        except Exception as e:
+            r.count_error = repr(e)
+    return runs
 
 
 def write_policy_csvs(tmpdir, n_files: int = 10, rows_per_file: int = 20, seed: int = 42):

@@ -535,7 +535,7 @@ def test_segment_dedup_matches_python_reference(spark, docs, seg, max_df):
 
 
 @pytest.mark.slow
-def test_registry_outputs_are_driver_canonicalizable(spark):
+def test_registry_outputs_are_driver_canonicalizable(registry_run):
     """Driver-harness compat gate (VERDICT r7 #6): the driver
     canonicalizes every checked query's output in pandas — sort_values
     over ALL columns, then an order-insensitive value hash — which
@@ -544,23 +544,20 @@ def test_registry_outputs_are_driver_canonicalizable(spark):
     Non-scalar cells are exactly the Array/Map/Struct columns, so the
     schema is a complete static witness: build every registry query's
     plan at sf0.001 and assert each output field is atomic. Catches
-    the whole bug class pre-driver without executing 186 queries."""
+    the whole bug class pre-driver. The plans come from the shared
+    ``registry_run`` fixture, which also runs them for
+    ``test_all_queries_run_at_smoke_sf``."""
     from pyspark.sql import types as T
-
-    from actuarial_reserve_modelling_spark.plans.registry import load_all
-    from tests.conftest import SF_SMOKE
 
     bad: dict[str, list[str]] = {}
     failed: dict[str, str] = {}
-    for name, q in load_all().items():
-        try:
-            schema = q.spark_fn(spark, SF_SMOKE).schema
-        except Exception as e:  # building the plan must not crash either
-            failed[name] = repr(e)
+    for name, r in registry_run.items():
+        if r.build_error is not None:  # building the plan must not crash either
+            failed[name] = r.build_error
             continue
         nonscalar = [
             f"{f.name}: {f.dataType.simpleString()}"
-            for f in schema.fields
+            for f in r.schema.fields
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
         ]
         if nonscalar:

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 
 from actuarial_reserve_modelling_spark.catalog import read_policies_csv
 from actuarial_reserve_modelling_spark.functions.reserves import (
+    CLAIM_INTERVAL,
     analytic_moments,
     simulate_reserves,
     total_reserves,
@@ -129,3 +131,42 @@ def test_risk_measures_clt_tolerance_and_ordering(spark, policies_dir):
         assert abs(got - approx) < 0.8 * sigma, (q, got, approx, sigma)
         assert rows[q]["tvar_value"] >= rows[q]["var_value"]
     assert rows[0.99]["var_value"] >= rows[0.95]["var_value"]
+
+
+@pytest.mark.parametrize("term", [120.0, 365.0, 5 * 365.0, 30 * 365.0])
+def test_claim_count_negative_binomial_identity(term):
+    """The law the kernel relies on, checked in plain numpy: the sum of
+    n floor(Exp(mean=β)) claim counts and one NegativeBinomial(n, p)
+    draw, p = 1 - exp(-1/β), have the same mean n·q/(1-q) and variance
+    n·q/(1-q)² (q = 1 - p). Every comparison holds within 5 standard
+    errors of the statistic being compared."""
+    n, reps = 250, 4000
+    beta = term / CLAIM_INTERVAL
+    p = -np.expm1(-1.0 / beta)
+    q = 1.0 - p
+    rng = np.random.default_rng(2024)
+    nb = rng.negative_binomial(n, p, reps).astype("float64")
+    geo = np.floor(rng.exponential(beta, (reps, n))).sum(axis=1)
+
+    mean, var = n * q / p, n * q / p**2
+    # sampling sd of a mean and of a variance over `reps` draws; the
+    # variance one uses NegativeBinomial's excess kurtosis 6/n + p²/(n·q)
+    se_mean = math.sqrt(var / reps)
+    kurt = 6.0 / n + p**2 / (n * q)
+    se_var = var * math.sqrt(2.0 / (reps - 1) + kurt / reps)
+    for sample in (nb, geo):
+        assert abs(sample.mean() - mean) < 5 * se_mean, (term, sample.mean(), mean)
+        assert abs(sample.var(ddof=1) - var) < 5 * se_var, (term, sample.var(ddof=1), var)
+    assert abs(nb.mean() - geo.mean()) < 5 * math.sqrt(2) * se_mean
+    assert abs(nb.var(ddof=1) - geo.var(ddof=1)) < 5 * math.sqrt(2) * se_var
+
+
+def test_edge_terms(spark):
+    """term = 0 has no claims, so a zero reserve; a negative or null
+    term is an invalid claim law and fails the task loudly."""
+    zero = spark.createDataFrame([("z", 0.0)], "id string, term double")
+    assert simulate_reserves(zero, n_trials=100).collect()[0]["mean_reserve"] == 0.0
+    for bad in (-365.0, None):
+        df = spark.createDataFrame([("b", bad)], "id string, term double")
+        with pytest.raises(Exception, match="p <= 0"):
+            simulate_reserves(df, n_trials=100).collect()
